@@ -16,14 +16,23 @@ Parity targets (citations into /root/reference):
   Spark SQL's three-arg ``split(col, pat, -1)`` already has the right
   semantics.
 
-Implementation note (Spark-first): the salt hash is expressed with
-built-in higher-order functions over the UTF-8 bytes of the key —
-``encode → per-byte conv(hex) → aggregate`` — so it stays inside
-whole-stage codegen on the JVM; no Python worker is involved.  A
-pandas-UDF variant is kept for cross-checking and as the template for
-hashes that genuinely need Python.  All arithmetic is done in BIGINT
-with an explicit ``% 2^32`` per step, so it is correct with or without
-ANSI mode (no silent overflow relied upon).
+Implementation note: the salt hash has two bit-exact forms.
+:func:`salt_bucket` is built-in higher-order functions over the UTF-8
+bytes of the key — ``encode → per-byte conv(hex) → aggregate`` — so it
+runs on the JVM with no Python worker, but the per-character fold is
+CodegenFallback (interpreted per element, ~2 s per 600k keys on 32
+cores).  :func:`salt_bucket_vec` is an Arrow pandas UDF that evaluates
+the same fold as one numpy closed form per batch.  The cell-store
+builders (``to_cells``, ``to_cells_write_aligned``, ``merge_cells`` in
+operators/cellstore.py) default to ``salt_bucket_vec`` at the default
+24 buckets because it is the faster path for bulk builds; every such
+build therefore starts Python workers (see worker_daemon.py for their
+per-task setup cost).  Other bucket counts, and the registry's
+``salt_distribution`` query, use the expression form, which is also the
+differential-test oracle.  The row-at-a-time ``salt_bucket_udf`` is kept
+for cross-checking.  All arithmetic is done in BIGINT with an explicit
+``% 2^32`` per step, so it is correct with or without ANSI mode (no
+silent overflow relied upon).
 """
 
 from __future__ import annotations

@@ -535,34 +535,53 @@ def _verify_chunked(
     if est is None or est < SMALL_FRAME_BYTES:
         return None
     cand = cand.localCheckpoint(eager=True)
-    payload = cand.agg(
-        F.sum((F.col("sz_a") + F.col("sz_b")).cast("bigint"))
-    ).first()[0]
-    payload = (payload or 0) * 8
-    k = -(-payload // VERIFY_CHUNK_BYTES)
-    if k <= 1:
-        out = _verify_pairs(cand, hs, hs, threshold)
-        return out.localCheckpoint(eager=True)
-    hs = hs.repartition("id").persist(StorageLevel.DISK_ONLY)
-    chunk_col = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(int(k)))
     parts = []
-    jvm_gc = None
-    for i in range(int(k)):
-        piece = _verify_pairs(
-            cand.filter(chunk_col == i), hs, hs, threshold
-        ).localCheckpoint(eager=True)
-        parts.append(piece)
-        if jvm_gc is None:
-            jvm_gc = piece.sparkSession.sparkContext._jvm.System.gc
-        # nudge the driver GC so the finished chunk's shuffle
-        # dependencies hit the ContextCleaner before the next chunk
-        # starts writing — this is what keeps peak scratch at ~budget
-        jvm_gc()
-    hs.unpersist()
+    try:
+        payload = cand.agg(
+            F.sum((F.col("sz_a") + F.col("sz_b")).cast("bigint"))
+        ).first()[0]
+        payload = (payload or 0) * 8
+        k = -(-payload // VERIFY_CHUNK_BYTES)
+        if k <= 1:
+            out = _verify_pairs(cand, hs, hs, threshold)
+            return out.localCheckpoint(eager=True)
+        hs = hs.repartition("id").persist(StorageLevel.DISK_ONLY)
+        chunk_col = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(int(k)))
+        jvm_gc = None
+        try:
+            for i in range(int(k)):
+                piece = _verify_pairs(
+                    cand.filter(chunk_col == i), hs, hs, threshold
+                ).localCheckpoint(eager=True)
+                parts.append(piece)
+                if jvm_gc is None:
+                    jvm_gc = piece.sparkSession.sparkContext._jvm.System.gc
+                # nudge the driver GC so the finished chunk's shuffle
+                # dependencies hit the ContextCleaner before the next
+                # chunk starts writing — this is what keeps peak scratch
+                # at ~budget
+                jvm_gc()
+        finally:
+            hs.unpersist()
+    except BaseException:
+        # a failing chunk releases the chunks it already verified
+        for piece in parts:
+            _drop_checkpoint(piece)
+        raise
+    finally:
+        # the verified output is checkpointed, so the candidate pin is
+        # dead once this call returns or raises
+        _drop_checkpoint(cand)
     out = parts[0]
     for piece in parts[1:]:
         out = out.unionAll(piece)
     return out
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a local checkpoint (``df.unpersist`` only
+    reaches the cache manager, which never held it)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def minhash_signature_frame(base: DataFrame, num_hashes: int = 128) -> DataFrame:

@@ -772,10 +772,12 @@ def ngram_lm_score(
     # regime the pinned frame's two consumers each re-shuffle by gram
     # keys — the `big` aggregate exchanges (a, b) partials and the SMJ
     # score probe exchanges the FULL frame.  Hash-partitioning by
-    # (a, b) BEFORE the pin (LogicalRDD preserves the partitioning
-    # through checkpoint and persist alike) satisfies the aggregate's
-    # clustering, keeps `big` co-partitioned with its probe, and both
-    # joins run exchange-free off the one shared shuffle.  Below the
+    # (a, b) BEFORE the pin satisfies the aggregate's clustering, keeps
+    # `big` co-partitioned with its probe, and both joins run
+    # exchange-free off the one shared shuffle.  Only a persist keeps
+    # that partitioning visible: a checkpoint's LogicalRDD drops the
+    # child's outputPartitioning, so the co-partitioned pin must be a
+    # lineage-kept persist (see _self_join_ready).  Below the
     # threshold the joins ride BroadcastHashJoin and the extra
     # exchange would be pure cost, so the trigger is the SAME
     # plan-size policy that flips the pin to DISK_ONLY: a disk-pinned

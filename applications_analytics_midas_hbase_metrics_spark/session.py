@@ -2,6 +2,15 @@
 way a 1000-executor cluster job would be: AQE on (runtime coalescing, skew
 join handling), Arrow for the few pandas-UDF boundaries, UTC session time
 zone so results are comparable with a UTC-naive oracle (DuckDB).
+
+Python workers run under :mod:`.worker_daemon` (``spark.python.daemon.module``)
+instead of ``pyspark.daemon``.  pyspark calls ``importlib.invalidate_caches()``
+at the start of every worker task, and on CPython 3.11 each cached zip
+importer then re-parses its whole archive (CPython gh-103200): ~16 re-reads
+of ``pyspark.zip`` per task, 130-210 ms.  The daemon re-reads an archive
+only when its mtime or size changed, which cut a trivial 4-task Python job
+from ~380 to ~165 ms on a 4-core host.  It is pyspark's own daemon loop
+otherwise.
 """
 
 from __future__ import annotations
@@ -11,6 +20,8 @@ import os
 import threading
 
 from pyspark.sql import SparkSession
+
+from . import worker_daemon
 
 #: Serializes every scoped mutation of session-global SQL conf (see
 #: :func:`scoped_shuffle_partitions`).  RLock so a scoped caller that
@@ -105,6 +116,7 @@ def get_spark(
         # has no native type for — read as long, convert at the source
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # composed pipelines keep lineage under their pins (fault
         # tolerance, round 14), so late-stage plans nest every upstream

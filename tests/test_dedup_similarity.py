@@ -113,6 +113,49 @@ def test_minhash_chunked_verify_equivalence(spark, monkeypatch):
     assert chunked_rows == base_rows and len(base_rows) > 0
 
 
+def test_chunked_verify_failure_releases_its_pins(spark, monkeypatch):
+    """A chunk that raises must not leave any pin the chunked verify made
+    (hash-set persist, candidate and finished-chunk checkpoints) in
+    getPersistentRDDs()."""
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        dedup as dd,
+        pinning,
+    )
+
+    docs = spark.range(60).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            F.lit("alpha beta gamma delta epsilon zeta eta theta"),
+            F.conv(F.col("id") % 7, 10, 16),
+            F.lit("iota kappa lambda mu nu xi omicron pi rho sigma"),
+        ).alias("text"),
+    )
+    monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", 1)
+    monkeypatch.setattr(dd, "VERIFY_CHUNK_BYTES", 200_000)  # k of ~3-5
+    jsc = spark.sparkContext._jsc
+    at_entry = set()
+    chunked, verify = dd._verify_chunked, dd._verify_pairs
+
+    def record_entry(*args):
+        at_entry.update(jsc.getPersistentRDDs().keySet())
+        return chunked(*args)
+
+    def fail_second_chunk(*args):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected chunk failure")
+        return verify(*args)
+
+    calls = []
+    monkeypatch.setattr(dd, "_verify_chunked", record_entry)
+    monkeypatch.setattr(dd, "_verify_pairs", fail_second_chunk)
+    with pytest.raises(RuntimeError, match="injected chunk failure"):
+        dd.minhash_near_duplicates(docs, threshold=0.4, shingle_k=2)
+    assert at_entry and len(calls) == 2
+    assert set(jsc.getPersistentRDDs().keySet()) <= at_entry
+
+
 def test_simhash_identical_and_distant(docs):
     fps = {r.id: r.simhash for r in D.simhash_fingerprints(docs).collect()}
     assert fps[1] == fps[2]  # identical text -> identical fingerprint
